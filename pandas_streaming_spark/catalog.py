@@ -8,11 +8,25 @@ At 100 TB the same API points at a partitioned lakehouse layout instead of
 single files; loaders keep using ``spark.read.parquet`` so partition
 pruning and predicate pushdown apply unchanged. See ``plans.scale_notes``
 for the recommended physical layout per table.
+
+Schema reuse: inferring a parquet schema starts a footer-reading Spark
+job, so :func:`load_table` infers each table once and keeps the result in
+a process-local map; later loads read with ``spark.read.schema(...)``
+and start no job. An entry is keyed by the table's absolute path and the
+session values of the confs that change what inference returns
+(``_INFERENCE_CONFS``), and it holds the source fingerprint (name, size
+and mtime_ns of every file) taken before inference. A load whose
+fingerprint differs (the file was rewritten or regenerated) infers again
+and replaces the entry; a failed inference stores nothing. A source the
+local filesystem cannot stat is inferred on every load, as before.
 """
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES: tuple[str, ...] = (
     "region",
@@ -57,14 +71,11 @@ def set_scale_layout(enabled: bool) -> bool:
 
 
 def _layout_active() -> bool:
-    import os
-
     return _LAYOUT_ENABLED and os.environ.get("SPARK_GRAFT_SCALE_LAYOUT", "1") != "0"
 
 
 def _layout_digest(sf_dir: str) -> str:
     import hashlib
-    import os
 
     return hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
 
@@ -86,8 +97,6 @@ def _layout_manifest_path(spark: SparkSession, sf_dir: str, name: str) -> str | 
 def _source_fingerprint(sf_dir: str, name: str) -> list:
     """(size, mtime_ns) per file of the source parquet — cheap staleness
     probe; the round driver regenerates testdata between rounds."""
-    import os
-
     p = table_path(sf_dir, name)
     if os.path.isdir(p):
         files = sorted(
@@ -103,7 +112,6 @@ def _load_bucketed(spark: SparkSession, sf_dir: str, name: str) -> DataFrame | N
     """Return the bucketed copy of (sf_dir, name) if a valid one exists,
     re-registering it in a fresh session's catalog from the manifest."""
     import json
-    import os
 
     mp = _layout_manifest_path(spark, sf_dir, name)
     if mp is None or not os.path.exists(mp):
@@ -145,7 +153,6 @@ def ensure_bucketed_layout(
     valid existing layout (matching source fingerprint) is reused across
     sessions via its manifest. Requires a local filesystem warehouse."""
     import json
-    import os
 
     existing = _load_bucketed(spark, sf_dir, name)
     if existing is not None:
@@ -179,7 +186,6 @@ def ensure_bucketed_layout(
 
 
 def drop_bucketed_layout(spark: SparkSession, sf_dir: str, name: str) -> None:
-    import os
     import shutil
 
     mp = _layout_manifest_path(spark, sf_dir, name)
@@ -193,6 +199,52 @@ def drop_bucketed_layout(spark: SparkSession, sf_dir: str, name: str) -> None:
         os.remove(mp)
 
 
+# --- schema reuse (see the module docstring) --------------------------------
+#: Session confs that change what parquet schema inference returns.
+_INFERENCE_CONFS: tuple[str, ...] = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+#: (absolute path, inference conf values) -> (source fingerprint, schema).
+#: Shared by every thread and session of the process: a dict get or set
+#: is atomic under the GIL, and two threads that miss together both infer
+#: and store the same schema, so a race costs one extra job, never a
+#: wrong schema.
+_SCHEMAS: dict[tuple, tuple[list, StructType]] = {}
+
+
+def read_parquet(
+    spark: SparkSession, *paths: str, schema: StructType | None = None
+) -> DataFrame:
+    """Read parquet with a schema the caller already holds, which starts
+    no Spark job; with ``schema=None`` Spark infers it from a footer."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
+
+
+def _read_source(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Plain read of a source table, inferring its schema only for a file
+    state (and inference confs) not seen before in this process."""
+    path = table_path(sf_dir, name)
+    try:
+        fingerprint = _source_fingerprint(sf_dir, name)
+    except OSError:  # missing or non-local source: let Spark resolve it
+        return read_parquet(spark, path)
+    key = (
+        os.path.abspath(path),
+        tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+    )
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == fingerprint:
+        return read_parquet(spark, path, schema=hit[1])
+    df = read_parquet(spark, path)
+    _SCHEMAS[key] = (fingerprint, df.schema)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
@@ -202,7 +254,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             return bucketed  # events ts was normalized at layout-write time
     if name == "events":
         try:
-            df = spark.read.parquet(table_path(sf_dir, name))
+            df = _read_source(spark, sf_dir, name)
         except Exception:
             # session without spark.sql.legacy.parquet.nanosAsLong rejects
             # the TIMESTAMP(NANOS) column outright (PARQUET_TYPE_ILLEGAL);
@@ -210,7 +262,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # a cluster deployment sets the conf instead.
             return _events_via_arrow(spark, table_path(sf_dir, name))
         return _normalize_event_ts(df)
-    return spark.read.parquet(table_path(sf_dir, name))
+    return _read_source(spark, sf_dir, name)
 
 
 def _events_via_arrow(spark: SparkSession, path: str) -> DataFrame:

@@ -296,12 +296,18 @@ def audit_registry(spark, sf_dir: str) -> dict[str, list[str]]:
             hits.extend(broadcastable_smj_joins(df))
         return name, hits
 
-    # r16 (VERDICT r15 item 1, guide §2.6): the audit is pure
+    # r16 (VERDICT r15 item 1, guide §2.6): the audit is mostly
     # driver-side planning — DataFrame builds + Catalyst explainString,
-    # all py4j calls that release the GIL — and the registry's ~300
-    # entries are independent, so a small thread pool parallelizes it
-    # for real. pool.map preserves registry order; the verdict is the
-    # same dict a sequential walk produced.
+    # all py4j calls that release the GIL. Builders run Spark jobs only
+    # for eager pins (localCheckpoint(eager=True)) and for the first
+    # schema inference per table (catalog._SCHEMAS). The registry's
+    # ~300 entries are independent, so a small thread pool parallelizes
+    # it for real. The 8 threads share catalog._SCHEMAS; that is safe
+    # because each dict get/set is atomic under the GIL and threads that
+    # miss together store the same schema for the same key (a race costs
+    # one extra inference job, never a wrong schema). pool.map preserves
+    # registry order; the verdict is the same dict a sequential walk
+    # produced.
     from concurrent.futures import ThreadPoolExecutor
 
     bad: dict[str, list[str]] = {}

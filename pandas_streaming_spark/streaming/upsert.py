@@ -68,6 +68,9 @@ import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from ..catalog import read_parquet
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -75,6 +78,13 @@ class ConcurrentWriteError(RuntimeError):
     the loser of the optimistic-concurrency race (Iceberg's
     CommitFailedException shape). The losing batch was NOT applied;
     re-read the head and retry, or fail the job."""
+
+
+def _record_schema(record: dict) -> StructType | None:
+    """The table schema a committed version record anchors, or None for a
+    record written without one."""
+    raw = record.get("schema")
+    return StructType.fromJson(json.loads(raw)) if raw else None
 
 
 def _seq_to_json(v):
@@ -370,9 +380,7 @@ class KeyedUpsertSink:
         seq_high = batch_high if prior_high is None else (
             prior_high if batch_high is None else max(prior_high, batch_high)
         )
-        schema_json = (
-            prior.get("schema") or batch.drop("__bucket").schema.json()
-        )
+        prior_schema = _record_schema(prior)
         fences = {**head["batch_ids"], self.writer_id: batch_id}
         version = head["version"] + 1
         if not n_rows:
@@ -380,6 +388,9 @@ class KeyedUpsertSink:
             # so version N always means "state after the first N
             # batches" — the contract read(version=...) time travel
             # relies on.
+            schema_json = (
+                prior.get("schema") or batch.drop("__bucket").schema.json()
+            )
             return (
                 self._version_record(version, fences, current, schema_json, seq_high),
                 None,
@@ -388,9 +399,9 @@ class KeyedUpsertSink:
         existing = [manifest[str(b)] for b in dirty if str(b) in manifest]
         merged = batch
         if existing:
-            old = spark.read.parquet(*existing).withColumn(
-                "__bucket", self._bucket()
-            )
+            old = read_parquet(
+                spark, *existing, schema=prior_schema
+            ).withColumn("__bucket", self._bucket())
             merged = batch.unionByName(old)
         merged = self._latest_per_key(merged)
         out_dir = os.path.join(
@@ -401,6 +412,17 @@ class KeyedUpsertSink:
         merged.write.partitionBy("__bucket").mode("overwrite").parquet(out_dir)
         for b in dirty:
             manifest[str(b)] = os.path.join(out_dir, f"__bucket={b}")
+        # reads use the recorded schema as is, so it must cover every
+        # file of the version: the union with the prior schema (analysis
+        # only, no job) takes the wider type of a column one batch
+        # widened or narrowed, and keeps a column a batch left out;
+        # Spark reads the narrower, column-less older files up to it.
+        written = merged.drop("__bucket")
+        if prior_schema is not None:
+            written = written.unionByName(
+                spark.createDataFrame([], prior_schema), allowMissingColumns=True
+            )
+        schema_json = written.schema.json()
         return (
             self._version_record(version, fences, manifest, schema_json, seq_high),
             out_dir,
@@ -439,7 +461,8 @@ class KeyedUpsertSink:
         seq_high=None,
     ) -> dict:
         """The full, self-contained content of one committed version's
-        manifest file. ``schema_json`` anchors the table schema so an
+        manifest file. ``schema_json`` anchors the table schema: reads
+        use it instead of inferring one from a footer, and an
         all-rows-compacted-away table stays readable (ADVICE r14);
         ``seq_high`` is the stream-progress high-water mark compact()
         derives retention from."""
@@ -539,23 +562,22 @@ class KeyedUpsertSink:
             raise ValueError("upsert table is empty (no committed batches)")
         record = self._load_manifest_record(version)
         paths = sorted(set(record["manifest"].values()))
+        schema = _record_schema(record)
         if not paths:
             # committed but (currently) empty table — e.g. every row was
             # a tombstone and compact() reclaimed them all. ADVICE r14:
             # this used to raise as if nothing was ever committed; the
             # schema recorded at commit time anchors an EMPTY DataFrame
             # instead, so "legitimately empty-but-alive" is readable.
-            from pyspark.sql.types import StructType
-
-            if not record.get("schema"):
+            if schema is None:
                 raise ValueError(
                     "upsert table is empty (no committed batches)"
                 )
-            snap = spark.createDataFrame(
-                [], StructType.fromJson(json.loads(record["schema"]))
-            )
+            snap = spark.createDataFrame([], schema)
         else:
-            snap = spark.read.parquet(*paths)
+            # the recorded schema spares Spark a footer-reading job;
+            # records written without one fall back to inference
+            snap = read_parquet(spark, *paths, schema=schema)
         if (
             not include_tombstones
             and self.tombstone_col

@@ -19,6 +19,9 @@ import pytest
 
 from pyspark.sql import functions as F
 
+#: Repository root: child writer processes import the package from it.
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def _dir_corpus(tmp_path, sf_dir):
     """A dir-of-parquet documents table (the replica shape) built from
@@ -204,9 +207,10 @@ def test_concurrent_reader_writer_sees_only_committed_versions(
     base = str(tmp_path / "shared-sink")
     child = tmp_path / "writer.py"
     child.write_text(
-        """
+        f"REPO = {REPO!r}\n"
+        + """
 import sys, time
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession
 from pandas_streaming_spark.streaming.upsert import KeyedUpsertSink
 

@@ -7,6 +7,7 @@ item 1) further down."""
 from __future__ import annotations
 
 import datetime
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -18,6 +19,8 @@ from pandas_streaming_spark.streaming.upsert import (
 )
 
 SCHEMA = "k long, seq long, v string, __del boolean"
+#: Repository root: child writer processes import the package from it.
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _df(spark, rows):
@@ -232,9 +235,10 @@ def test_two_process_writers_no_lost_updates(spark, tmp_path):
     base = str(tmp_path / "two-writer-sink")
     child = tmp_path / "writer2.py"
     child.write_text(
-        """
+        f"REPO = {REPO!r}\n"
+        + """
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession
 from pandas_streaming_spark.streaming.upsert import KeyedUpsertSink
 
@@ -774,9 +778,10 @@ def test_two_process_transactions_no_lost_updates(spark, tmp_path):
     log.table("y", ["k"], ["seq"], 4)
     child = tmp_path / "txwriter.py"
     child.write_text(
-        """
+        f"REPO = {REPO!r}\n"
+        + """
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, REPO)
 from pyspark.sql import SparkSession
 from pandas_streaming_spark.streaming.txn import SinkTransactionLog
 

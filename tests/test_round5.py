@@ -296,7 +296,8 @@ def test_bench_compact_line_bounded():
     import json
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path.insert(0, repo)
     from bench import HEADLINE, compact_line
 
     fat = {

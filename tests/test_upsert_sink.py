@@ -319,3 +319,61 @@ def test_upsert_vacuum_removes_marker_only_husks(spark):
         "marker-only version dirs must be fully reclaimed")
     assert {r["v"] for r in sink.read(spark).collect()} == {"v2"}
     sink.close()
+
+
+def test_upsert_reads_use_recorded_schema(spark, jobs_started):
+    """Snapshot and time-travel reads take the schema each version
+    record stores, so building them starts no Spark job; a record
+    without a schema still reads (and merges) through inference."""
+    import json
+
+    schema = "k long not null, seq long, ts timestamp, v string"
+    sink = KeyedUpsertSink(_fresh_dir("upsert-schema"), ["k"], ["seq"], num_buckets=2)
+    t = F.to_timestamp(F.lit("2024-01-01 00:00:00"))
+    sink(spark.createDataFrame([(1, 1, None, "a"), (2, 1, None, "b")], schema)
+         .withColumn("ts", t), 0)
+    sink(spark.createDataFrame([(1, 2, None, "c")], schema).withColumn("ts", t), 1)
+    latest, latest_jobs = jobs_started(lambda: sink.read(spark))
+    v1, v1_jobs = jobs_started(lambda: sink.read(spark, version=1))
+    assert latest_jobs == [] and v1_jobs == []
+    assert latest.columns == ["k", "seq", "ts", "v"]
+    assert dict(latest.dtypes)["ts"] == "timestamp"
+    assert {r["k"]: r["v"] for r in latest.collect()} == {1: "c", 2: "b"}
+    assert {r["k"]: r["v"] for r in v1.collect()} == {1: "a", 2: "b"}
+
+    path = sink._manifest_path(2)
+    with open(path) as f:
+        record = json.load(f)
+    del record["schema"]
+    with open(path, "w") as f:
+        json.dump(record, f)
+    assert {r["k"]: r["v"] for r in sink.read(spark).collect()} == {1: "c", 2: "b"}
+    sink(spark.createDataFrame([(2, 2, None, "d")], schema).withColumn("ts", t), 2)
+    assert {r["k"]: r["v"] for r in sink.read(spark).collect()} == {1: "c", 2: "d"}
+    sink.close()
+
+
+def test_upsert_type_drift_reads_back(spark):
+    """A batch may widen or narrow a column's type while it rewrites only
+    its dirty buckets; each version's read must still cover the clean
+    buckets' older files."""
+    widen = KeyedUpsertSink(_fresh_dir("upsert-widen"), ["k"], ["seq"], num_buckets=4)
+    widen(spark.createDataFrame([(k, 1, k) for k in range(8)], "k long, seq long, v int"), 0)
+    widen(spark.createDataFrame([(2, 2, 2**40)], "k long, seq long, v long"), 1)
+    assert dict(widen.read(spark, version=1).dtypes)["v"] == "int"
+    snap = widen.read(spark)
+    assert dict(snap.dtypes)["v"] == "bigint"
+    assert {r["k"]: r["v"] for r in snap.collect()} == {k: k for k in range(8)} | {2: 2**40}
+    widen.close()
+
+    narrow = KeyedUpsertSink(_fresh_dir("upsert-narrow"), ["k"], ["seq"], num_buckets=4)
+    keys = spark.createDataFrame([(k,) for k in range(8)], "k long")
+    bucket = {r["k"]: r["b"] for r in keys.select("k", narrow._bucket().alias("b")).collect()}
+    lone = next(k for k in range(1, 8) if bucket[k] != bucket[0])
+    narrow(spark.createDataFrame([(0, 1, 2**40)], "k long, seq long, v long"), 0)
+    # a bucket no earlier batch wrote: no older file is merged into it
+    narrow(spark.createDataFrame([(lone, 1, 9)], "k long, seq long, v int"), 1)
+    snap = narrow.read(spark)
+    assert dict(snap.dtypes)["v"] == "bigint"
+    assert {r["k"]: r["v"] for r in snap.collect()} == {0: 2**40, lone: 9}
+    narrow.close()
