@@ -402,7 +402,9 @@ class KeyedUpsertSink:
             old = read_parquet(
                 spark, *existing, schema=prior_schema
             ).withColumn("__bucket", self._bucket())
-            merged = batch.unionByName(old)
+            # a batch may leave out a table column (or add one): it reads
+            # as null, as it does when every dirty bucket is new
+            merged = batch.unionByName(old, allowMissingColumns=True)
         merged = self._latest_per_key(merged)
         out_dir = os.path.join(
             self.base_dir, f"v{version:06d}-{uuid.uuid4().hex[:8]}"

@@ -42,6 +42,36 @@ def test_q01_is_codegen(spark, sf_dir):
     assert codegen_stage_count(tpch.q01_pricing_summary(spark, sf_dir)) >= 1
 
 
+# the headline queries without q81, whose AQE re-plan now and then picks
+# another join and compiles a few new classes on a warm pass
+_CODEGEN_MIX = (
+    "q01_pricing_summary", "q04_star_join_revenue", "q11_asof_join",
+    "q14_count_distinct", "q21_topk_per_group", "q27_global_topk",
+    "q34_date_trunc_tumbling", "q39_similarity_topk", "q40_top_tokens",
+    "q50_lsh_candidate_pairs", "q84_chunk_documents", "q88_salted_hot_key",
+    "q94_funnel",
+)
+
+
+def test_warm_query_mix_compiles_nothing(spark, sf_dir):
+    """A query shape seen before reuses its generated classes: the mix
+    compiles more classes than Spark's default cache of 100 holds, and a
+    second pass compiles none."""
+    from pandas_streaming_spark.queries import QUERIES
+
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source
+    compiles = metrics.CodegenMetrics.METRIC_COMPILATION_TIME()
+
+    def run_pass() -> int:
+        before = compiles.getCount()
+        for name in _CODEGEN_MIX:
+            QUERIES[name](spark, sf_dir).toPandas()
+        return compiles.getCount() - before
+
+    assert run_pass() > 100
+    assert run_pass() == 0
+
+
 def test_global_topk_avoids_full_sort(spark, sf_dir):
     from pandas_streaming_spark.plans import physical_plan
     from pandas_streaming_spark.queries.analytic import q27_global_topk

@@ -198,30 +198,32 @@ def test_foreachbatch_exactly_once_under_injected_crash(spark, sf_dir):
         )
         q.awaitTermination()
 
-    with _pytest.raises(Exception, match="injected|Terminated|foreach"):
-        run()
-    run()  # restart from the same checkpoint
-    assert crashed["done"] and calls.count(2) == 2  # batch 2 re-delivered
-    assert sorted(set(calls)) == [0, 1, 2, 3, 4]
-    assert len(sink.versions()) == 5  # one commit per DISTINCT batch
+    try:
+        with _pytest.raises(Exception, match="injected|Terminated|foreach"):
+            run()
+        run()  # restart from the same checkpoint
+        assert crashed["done"] and calls.count(2) == 2  # batch 2 re-delivered
+        assert sorted(set(calls)) == [0, 1, 2, 3, 4]
+        assert len(sink.versions()) == 5  # one commit per DISTINCT batch
 
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(
-        FF.col("ts").desc(), FF.col("event_id").desc()
-    )
-    want = {
-        (r["user_id"], r["event_type"], round(r["value"], 2))
-        for r in ev.withColumn("__rn", FF.row_number().over(w))
-        .filter(FF.col("__rn") == 1)
-        .collect()
-    }
-    got = {
-        (r["user_id"], r["event_type"], round(r["value"], 2))
-        for r in sink.read(spark).collect()
-    }
-    assert got == want
-    sink.close()
-    shutil.rmtree(chkpt, ignore_errors=True)
+        ev = load_table(spark, sf_dir, "events")
+        w = Window.partitionBy("user_id").orderBy(
+            FF.col("ts").desc(), FF.col("event_id").desc()
+        )
+        want = {
+            (r["user_id"], r["event_type"], round(r["value"], 2))
+            for r in ev.withColumn("__rn", FF.row_number().over(w))
+            .filter(FF.col("__rn") == 1)
+            .collect()
+        }
+        got = {
+            (r["user_id"], r["event_type"], round(r["value"], 2))
+            for r in sink.read(spark).collect()
+        }
+        assert got == want
+    finally:
+        sink.close()
+        shutil.rmtree(chkpt, ignore_errors=True)
 
 
 def test_registry_plan_audit_clean(spark, sf_dir):

@@ -5,6 +5,7 @@ property that makes per-batch cost O(batch), not O(table)."""
 from __future__ import annotations
 
 import os
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -24,20 +25,22 @@ def _run_replay_upsert(spark, sf_dir: str, k: int) -> list[tuple]:
         _fresh_dir("upsert-test"), ["user_id"], ["ts", "event_id"], num_buckets=4
     )
     chkpt = _fresh_dir("chkpt-upsert")
-    q = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(sink)
-        .option("checkpointLocation", chkpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = sorted(
-        (r["user_id"], r["event_id"])
-        for r in sink.read(spark).select("user_id", "event_id").collect()
-    )
-    sink.close()
-    return rows
+    try:
+        q = (
+            stream.writeStream.outputMode("append")
+            .foreachBatch(sink)
+            .option("checkpointLocation", chkpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+        return sorted(
+            (r["user_id"], r["event_id"])
+            for r in sink.read(spark).select("user_id", "event_id").collect()
+        )
+    finally:
+        sink.close()
+        shutil.rmtree(chkpt, ignore_errors=True)
 
 
 @pytest.mark.parametrize("k", [1, 8])
@@ -377,3 +380,22 @@ def test_upsert_type_drift_reads_back(spark):
     assert dict(snap.dtypes)["v"] == "bigint"
     assert {r["k"]: r["v"] for r in snap.collect()} == {0: 2**40, lone: 9}
     narrow.close()
+
+
+def test_upsert_batch_missing_column_commits(spark):
+    """A batch that leaves out one of the table's columns commits whether
+    its keys land in a bucket that already holds rows or in a new one;
+    the missing column reads as null."""
+    sink = KeyedUpsertSink(_fresh_dir("upsert-missing"), ["k"], ["seq"], num_buckets=4)
+    keys = spark.createDataFrame([(k,) for k in range(32)], "k long")
+    bucket = {r["k"]: r["b"] for r in keys.select("k", sink._bucket().alias("b")).collect()}
+    same = next(k for k in range(1, 32) if bucket[k] == bucket[0])
+    fresh = next(k for k in range(1, 32) if bucket[k] != bucket[0])
+    try:
+        sink(spark.createDataFrame([(0, 1, "a")], "k long, seq long, v string"), 0)
+        sink(spark.createDataFrame([(same, 1), (fresh, 1)], "k long, seq long"), 1)
+        snap = sink.read(spark)
+        assert snap.columns == ["k", "seq", "v"]
+        assert {r["k"]: r["v"] for r in snap.collect()} == {0: "a", same: None, fresh: None}
+    finally:
+        sink.close()
