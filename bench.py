@@ -578,7 +578,7 @@ def main() -> None:
             # number from round 9 on. The 5-trigger protocol rate is
             # floor-bound by ~5 x ~460 ms of fixed per-trigger engine
             # latency (profiled: addBatch ~300 ms + WAL ~115 + plan ~26
-            # — scripts/profile_streaming.py), so its drift across
+            # — plans/scale_notes.md), so its drift across
             # rounds (43.5k -> 40.4k) tracks machine noise on that
             # fixed floor, not the state machinery; catch-up
             # (availableNow over the SAME immutable split, final state
@@ -659,7 +659,7 @@ def main() -> None:
             # Streaming throughput at 10x events (same k=5 protocol):
             # the sf0.1 number is floor-bound by ~5 x ~250 ms of
             # per-trigger engine latency (planning + offset/commit WAL +
-            # state commit — scripts/profile_streaming.py decomposes it),
+            # state commit — plans/scale_notes.md decomposes it),
             # which is FIXED per trigger; 10x the events through the
             # same five triggers shows the throughput the state machinery
             # actually sustains once that floor amortizes.

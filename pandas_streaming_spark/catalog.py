@@ -19,11 +19,31 @@ and mtime_ns of every file) taken before inference. A load whose
 fingerprint differs (the file was rewritten or regenerated) infers again
 and replaces the entry; a failed inference stores nothing. A source the
 local filesystem cannot stat is inferred on every load, as before.
+
+Derived copies: the streaming harness and a few entries read copies of a
+source table rather than the table itself (replay splits, Kafka spools,
+a two-epoch layout, an ORC layout, a z-ordered copy). Structured
+Streaming is exactly-once only over input that can be replayed and does
+not change, so each copy is built once per state of its source table and
+reused after that. :func:`derived_dir` is the one place that policy
+lives: the copy's directory under ``SCRATCH`` is named by
+:func:`derived_key` (the table's absolute path, its source fingerprint
+and the caller's parameters), the caller's ``build`` writes into a
+private temporary directory, and one ``os.rename`` publishes it with an
+``_OK`` marker inside. Builders of one key are serialized by a file
+lock, so threads or processes that miss together build once and all
+return the same complete directory; a failed build publishes nothing.
 """
 
 from __future__ import annotations
 
+import fcntl
+import hashlib
+import json
 import os
+import shutil
+import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
@@ -75,8 +95,6 @@ def _layout_active() -> bool:
 
 
 def _layout_digest(sf_dir: str) -> str:
-    import hashlib
-
     return hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
 
 
@@ -108,11 +126,59 @@ def _source_fingerprint(sf_dir: str, name: str) -> list:
             for f in files]
 
 
+# --- derived copies (see the module docstring) -----------------------------
+#: Directory for derived copies and harness scratch, at the repository root.
+SCRATCH = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".scratch"
+)
+
+
+def derived_key(sf_dir: str, name: str, params) -> str:
+    """Content key of a copy of table ``name`` built with ``params``
+    (JSON-serializable): a rewritten source maps to a new key."""
+    blob = json.dumps(
+        [os.path.abspath(table_path(sf_dir, name)),
+         _source_fingerprint(sf_dir, name), params]
+    )
+    return hashlib.md5(blob.encode()).hexdigest()[:16]
+
+
+def derived_dir(
+    sf_dir: str,
+    name: str,
+    prefix: str,
+    params,
+    build: Callable[[str], None],
+) -> str:
+    """Directory ``SCRATCH/{prefix}-{derived_key}`` holding the copy that
+    ``build(tmp)`` writes into the empty directory ``tmp``; built on the
+    first call per key and returned as is after that."""
+    out = os.path.join(SCRATCH, f"{prefix}-{derived_key(sf_dir, name, params)}")
+    marker = os.path.join(out, "_OK")
+    if os.path.exists(marker):
+        return out
+    os.makedirs(SCRATCH, exist_ok=True)
+    # flock excludes separate open() calls, threads of one process included
+    with open(f"{out}.lock", "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
+        if os.path.exists(marker):  # another builder published while we waited
+            return out
+        tmp = f"{out}.tmp-{uuid.uuid4().hex}"
+        os.makedirs(tmp)
+        try:
+            build(tmp)
+            with open(os.path.join(tmp, "_OK"), "w") as f:
+                f.write("ok")
+            shutil.rmtree(out, ignore_errors=True)  # stale copy without a marker
+            os.rename(tmp, out)
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+    return out
+
+
 def _load_bucketed(spark: SparkSession, sf_dir: str, name: str) -> DataFrame | None:
     """Return the bucketed copy of (sf_dir, name) if a valid one exists,
     re-registering it in a fresh session's catalog from the manifest."""
-    import json
-
     mp = _layout_manifest_path(spark, sf_dir, name)
     if mp is None or not os.path.exists(mp):
         return None
@@ -152,8 +218,6 @@ def ensure_bucketed_layout(
     that :func:`load_table` will transparently prefer. Idempotent: a
     valid existing layout (matching source fingerprint) is reused across
     sessions via its manifest. Requires a local filesystem warehouse."""
-    import json
-
     existing = _load_bucketed(spark, sf_dir, name)
     if existing is not None:
         return existing
@@ -186,12 +250,8 @@ def ensure_bucketed_layout(
 
 
 def drop_bucketed_layout(spark: SparkSession, sf_dir: str, name: str) -> None:
-    import shutil
-
     mp = _layout_manifest_path(spark, sf_dir, name)
     if mp and os.path.exists(mp):
-        import json
-
         with open(mp, encoding="utf-8") as f:
             m = json.load(f)
         spark.sql(f"DROP TABLE IF EXISTS {m['table_name']}")
@@ -346,7 +406,6 @@ def write_bucketed(
             "defeat the stale-warehouse-dir cleanup"
         )
     spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    import shutil
     from urllib.parse import urlparse
 
     wh_uri = spark.conf.get("spark.sql.warehouse.dir")

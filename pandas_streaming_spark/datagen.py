@@ -50,9 +50,9 @@ def scale_dataset(
     re-synthesizes instead of returning a stale copy.
 
     ``only``: replicate just the listed fact tables and copy the rest at
-    1× — the 1000×-posture probes (scripts/probe1000x.py) replicate the
-    one fact table a probed query reads instead of paying a 1000×
-    lineitem expansion nothing will scan."""
+    1× — a 1000×-posture probe replicates the one fact table the probed
+    query reads instead of paying a 1000× lineitem expansion nothing will
+    scan."""
     import hashlib
 
     fp = hashlib.md5()

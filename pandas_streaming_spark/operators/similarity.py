@@ -7,8 +7,6 @@ the same structure as an IVF index (bucket = cell, exact re-rank inside).
 
 All kernels are higher-order array expressions — JVM-side, codegen'd,
 bit-identical to the duckdb oracle's double fold (see functions/).
-For throughput-only paths a NumPy ``pandas_udf`` matmul batch kernel is
-provided; it is *not* used in graded queries (float-order differs).
 
 Scale notes (100 TB):
 - cosine_topk broadcast-joins a single query row and takes a global
@@ -20,8 +18,6 @@ Scale notes (100 TB):
 """
 
 from __future__ import annotations
-
-import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -833,33 +829,3 @@ def ann_recall(
         .orderBy("query_id")
     )
 
-
-def cosine_topk_numpy(
-    embeddings: DataFrame,
-    query: list[float],
-    k: int = 20,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Throughput path: Arrow-batched NumPy matmul kernel (bench-only —
-    float accumulation order differs from the SQL fold, so not graded)."""
-    import numpy as np
-    from pyspark.sql.types import DoubleType
-
-    qv = np.asarray(query, dtype=np.float64)
-    qn = float(np.linalg.norm(qv))
-
-    @F.pandas_udf(DoubleType())
-    def _cos(batch: pd.Series) -> pd.Series:
-        m = np.vstack(batch.to_numpy())  # (B, dim) float32
-        m = m.astype(np.float64, copy=False)
-        norms = np.linalg.norm(m, axis=1) * qn
-        with pd.option_context("mode.chained_assignment", None):
-            sims = (m @ qv) / np.where(norms == 0.0, np.nan, norms)
-        return pd.Series(sims)
-
-    return (
-        embeddings.select(F.col(id_col), _cos(F.col(vec_col)).alias("sim"))
-        .orderBy(F.col("sim").desc(), F.col(id_col))
-        .limit(k)
-    )

@@ -61,41 +61,30 @@ def write_zordered(
 
 
 def zordered_events_path(spark: SparkSession, sf_dir: str) -> str:
-    """Content-cached z-ordered copy of the events table, clustered on
-    (user_id, hour-of-span): build once per source fingerprint under
-    .scratch, reuse across queries/sessions (same idiom as the replay
-    split cache)."""
-    import hashlib
+    """Z-ordered copy of the events table, clustered on (user_id,
+    hour-of-span): a derived copy (``catalog.derived_dir``) built once
+    per state of the source and reused across queries and sessions."""
+    from pandas_streaming_spark.catalog import derived_dir, load_table
 
-    from pandas_streaming_spark.catalog import load_table
-    from pandas_streaming_spark.streaming.replay import SCRATCH
+    def build(tmp: str) -> None:
+        ev = load_table(spark, sf_dir, "events")
+        # hour index relative to the table's own start keeps the domain in
+        # 16 bits for any realistic span (one offline 1-row aggregate at
+        # layout-build time; a lakehouse would use table-stats instead)
+        h0 = ev.agg(
+            F.floor(F.min(F.unix_micros("ts")) / 3_600_000_000).alias("h0")
+        ).first()["h0"]
+        hour_idx = (
+            F.floor(F.unix_micros("ts") / F.lit(3_600_000_000)) - F.lit(int(h0))
+        ).cast("long")
+        write_zordered(
+            ev,
+            z_value(F.col("user_id"), hour_idx, bits=16),
+            tmp,
+            n_files=32,
+        )
 
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"zorder|{sf_dir}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(SCRATCH, f"zorder-{key}")
-    marker = os.path.join(out, "_SUCCESS")
-    if os.path.exists(marker):
-        return out
-    ev = load_table(spark, sf_dir, "events")
-    # hour index relative to the table's own start keeps the domain in
-    # 16 bits for any realistic span (one offline 1-row aggregate at
-    # layout-build time; a lakehouse would use table-stats instead)
-    h0 = ev.agg(
-        F.floor(F.min(F.unix_micros("ts")) / 3_600_000_000).alias("h0")
-    ).first()["h0"]
-    hour_idx = (
-        F.floor(F.unix_micros("ts") / F.lit(3_600_000_000)) - F.lit(int(h0))
-    ).cast("long")
-    write_zordered(
-        ev,
-        z_value(F.col("user_id"), hour_idx, bits=16),
-        out,
-        n_files=32,
-    )
-    return out
+    return derived_dir(sf_dir, "events", "zorder", [], build)
 
 
 def file_prune_fraction(

@@ -8,6 +8,8 @@ Same house rules and oracle discipline as the parent module.
 """
 
 from __future__ import annotations
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pandas_streaming_spark.operators.dedup import (
@@ -20,7 +22,7 @@ from pandas_streaming_spark.operators.dedup import (
     simhash_audit,
     simhash_fingerprints,
 )
-from pandas_streaming_spark.catalog import load_table
+from pandas_streaming_spark.catalog import SCRATCH, derived_key, load_table
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -746,30 +748,15 @@ _PAIRS_ALGO_V = "a2-" + "".join(
 )
 
 
-def _corpus_fingerprint(sf_dir: str) -> str:
-    """Content fingerprint of the documents table: absolute path + file
-    sizes + mtimes (dir-of-parquet replicas included), so a regenerated
-    or rescaled corpus maps to a DIFFERENT artifact directory and
-    staleness is structurally impossible."""
-    import hashlib
-    import os
-
-    p = os.path.join(sf_dir, "documents.parquet")
-    if os.path.isdir(p):
-        # ADVICE r13: size alone let a regenerated same-size replica
-        # serve a stale pair table — include mtime_ns per part file for
-        # parity with the single-file branch below.
-        def _part(n: str) -> str:
-            st = os.stat(os.path.join(p, n))
-            return f"{n}:{st.st_size}:{st.st_mtime_ns}"
-
-        sig = ";".join(
-            _part(n) for n in sorted(os.listdir(p)) if n.endswith(".parquet")
-        )
-    else:
-        st = os.stat(p)
-        sig = f"{st.st_size}:{st.st_mtime_ns}"
-    return hashlib.md5(f"{os.path.abspath(p)}|{sig}".encode()).hexdigest()[:16]
+def _pairs_dir(sf_dir: str, threshold_e4: int) -> str:
+    """Artifact directory of the verified pair table: keyed like every
+    derived copy (``catalog.derived_key``: the documents table's absolute
+    path and per-file names, sizes and mtimes) plus the threshold and the
+    ``_PAIRS_ALGO_V`` kernel token, so a regenerated or rescaled corpus
+    maps to a DIFFERENT directory and staleness is structurally
+    impossible."""
+    tag = derived_key(sf_dir, "documents", [threshold_e4, _PAIRS_ALGO_V])
+    return os.path.join(SCRATCH, "verified_pairs", tag)
 
 
 def verified_pairs(
@@ -784,35 +771,31 @@ def verified_pairs(
     MinHash → banded-LSH → exact-Jaccard chain from scratch — correct
     but wasteful by construction; at 100 TB the verified pair frame is
     exactly the artifact a curation run materializes once and every
-    downstream panel joins against. First call per artifact tag —
-    corpus fingerprint (path + per-file sizes + mtimes, both
-    single-file and dir-of-parquet shapes) + threshold + the
-    ``_PAIRS_ALGO_V`` kernel-version token (ADVICE r13: a changed
-    minhash/banding/verify kernel must never serve pairs computed by
-    the old one) — computes ``_neardup_pairs`` and
-    commits it through :class:`KeyedUpsertSink` — the repo's
-    manifest/MERGE machinery (streaming/upsert.py): bucketed immutable
-    parquet + atomic manifest/HEAD commit, so a concurrent first call
-    is safe (second commit of batch 0 is skipped idempotently) and a
-    crash mid-write leaves no readable partial state. Later calls read
-    the committed snapshot — the pair chain appears ONCE in the
-    combined lineage of the whole report family. The sink's keyed MERGE
-    is also the production incremental path: a new crawl shard batches
-    its (id_a, id_b, jac_e4) rows into the same table (q113's
+    downstream panel joins against. First call per artifact directory
+    (``_pairs_dir``: corpus content + threshold + the ``_PAIRS_ALGO_V``
+    kernel-version token — a changed minhash/banding/verify kernel must
+    never serve pairs computed by the old one) — computes
+    ``_neardup_pairs`` and commits it through :class:`KeyedUpsertSink`
+    — the repo's manifest/MERGE machinery (streaming/upsert.py):
+    bucketed immutable parquet + atomic manifest/HEAD commit, so a
+    concurrent first call is safe (second commit of batch 0 is skipped
+    idempotently) and a crash mid-write leaves no readable partial
+    state. Later calls read the committed snapshot — the pair chain
+    appears ONCE in the combined lineage of the whole report family.
+    The sink's keyed MERGE is also the production incremental path: a
+    new crawl shard batches its (id_a, id_b, jac_e4) rows into the same
+    table (q113's
     shard-vs-corpus posture) instead of recomputing the corpus.
     Oracles are unchanged — they re-derive the full chain in SQL, so
     the stored artifact is re-graded against first principles on every
     sweep."""
-    import os
     import shutil
 
-    from pandas_streaming_spark.streaming.replay import SCRATCH
     from pandas_streaming_spark.streaming.upsert import KeyedUpsertSink
 
-    root = os.path.join(SCRATCH, "verified_pairs")
+    base = _pairs_dir(sf_dir, threshold_e4)
+    root = os.path.dirname(base)
     os.makedirs(root, exist_ok=True)
-    tag = f"{_corpus_fingerprint(sf_dir)}-t{threshold_e4}-{_PAIRS_ALGO_V}"
-    base = os.path.join(root, tag)
     sink = KeyedUpsertSink(
         base, key_cols=["id_a", "id_b"], seq_cols=["jac_e4"], num_buckets=8
     )

@@ -8,18 +8,12 @@ outputs exact integers or identical-arithmetic doubles.
 
 from __future__ import annotations
 
-import hashlib
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from pandas_streaming_spark.catalog import load_table
-
-_SCRATCH = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch"
-)
+from pandas_streaming_spark.catalog import derived_dir, load_table
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -27,8 +21,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _evolved_layout(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once, content-keyed cache) a two-epoch parquet layout of
-    the orders table under ``.scratch``:
+    """Two-epoch parquet layout of the orders table, a derived copy
+    (``catalog.derived_dir``) built once per state of the source:
 
     - ``epoch=0``: odd order keys, WITHOUT the late column;
     - ``epoch=1``: even order keys, WITH a new ``channel`` column
@@ -36,50 +30,18 @@ def _evolved_layout(spark: SparkSession, sf_dir: str) -> str:
 
     This is the real shape of a lake that added a column mid-history —
     per-file schemas genuinely differ, which is exactly what
-    ``mergeSchema`` exists for. Executor tasks write the files; the
-    driver only manages the cache marker."""
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}|schema-evo-v1".encode()
-    ).hexdigest()[:12]
-    out_dir = os.path.join(_SCRATCH, f"schema-evo-{key}")
-    marker = os.path.join(out_dir, "_OK")
-    if os.path.exists(marker):
-        return out_dir
-    tmp = f"{out_dir}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    o = _t(spark, sf_dir, "orders")
-    e0 = o.filter(F.col("o_orderkey") % 2 == 1)
-    e1 = o.filter(F.col("o_orderkey") % 2 == 0).withColumn(
-        "channel", F.concat(F.lit("c"), (F.col("o_custkey") % 3).cast("string"))
-    )
-    e0.write.mode("overwrite").parquet(os.path.join(tmp, "epoch=0"))
-    e1.write.mode("overwrite").parquet(os.path.join(tmp, "epoch=1"))
-    with open(os.path.join(tmp, "_OK"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(tmp, out_dir)
-    except OSError:
-        if not os.path.exists(marker):
-            shutil.rmtree(out_dir, ignore_errors=True)
-            try:
-                os.rename(tmp, out_dir)
-            except OSError:
-                # lost the race twice: another writer owns out_dir now.
-                # Its rename is atomic and the marker rides inside the
-                # renamed tree, so re-check it; never hand back the
-                # uncached tmp path (no marker, never cleaned up).
-                shutil.rmtree(tmp, ignore_errors=True)
-                if not os.path.exists(marker):
-                    raise RuntimeError(
-                        f"evolved-layout cache unavailable at {out_dir}: "
-                        "rename failed twice and no competing writer "
-                        "left a valid _OK marker"
-                    )
-        else:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return out_dir
+    ``mergeSchema`` exists for. Executor tasks write the files."""
+
+    def build(tmp: str) -> None:
+        o = _t(spark, sf_dir, "orders")
+        e0 = o.filter(F.col("o_orderkey") % 2 == 1)
+        e1 = o.filter(F.col("o_orderkey") % 2 == 0).withColumn(
+            "channel", F.concat(F.lit("c"), (F.col("o_custkey") % 3).cast("string"))
+        )
+        e0.write.parquet(os.path.join(tmp, "epoch=0"))
+        e1.write.parquet(os.path.join(tmp, "epoch=1"))
+
+    return derived_dir(sf_dir, "orders", "schema-evo", [], build)
 
 
 def q187_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -112,53 +74,29 @@ def q187_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _orc_layout(spark: SparkSession, sf_dir: str) -> str:
-    """Write (once, content-keyed cache) the documents table as a
-    lang-partitioned ORC layout under ``.scratch`` — the second
-    columnar format a multi-engine lake actually carries next to
-    parquet (same epoch-cache protocol as _evolved_layout)."""
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}|orc-v1".encode()
-    ).hexdigest()[:12]
-    out_dir = os.path.join(_SCRATCH, f"orcdocs-{key}")
-    marker = os.path.join(out_dir, "_OK")
-    if os.path.exists(marker):
-        return out_dir
-    tmp = f"{out_dir}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    docs = _t(spark, sf_dir, "documents")
-    (
-        docs.select("doc_id", "source", "n_chars", F.split("text", " ").alias("toks"), "lang")
-        .select(
-            "doc_id",
-            "source",
-            F.col("n_chars").cast("long").alias("n_chars"),
-            F.size("toks").cast("long").alias("n_toks"),
-            "lang",
+    """The documents table as a lang-partitioned ORC layout, a derived
+    copy (``catalog.derived_dir``) — the second columnar format a
+    multi-engine lake actually carries next to parquet."""
+
+    def build(tmp: str) -> None:
+        docs = _t(spark, sf_dir, "documents")
+        (
+            docs.select(
+                "doc_id", "source", "n_chars", F.split("text", " ").alias("toks"), "lang"
+            )
+            .select(
+                "doc_id",
+                "source",
+                F.col("n_chars").cast("long").alias("n_chars"),
+                F.size("toks").cast("long").alias("n_toks"),
+                "lang",
+            )
+            .write.mode("overwrite")
+            .partitionBy("lang")
+            .orc(tmp)
         )
-        .write.mode("overwrite")
-        .partitionBy("lang")
-        .orc(tmp)
-    )
-    with open(os.path.join(tmp, "_OK"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(tmp, out_dir)
-    except OSError:
-        if not os.path.exists(marker):
-            shutil.rmtree(out_dir, ignore_errors=True)
-            try:
-                os.rename(tmp, out_dir)
-            except OSError:
-                shutil.rmtree(tmp, ignore_errors=True)
-                if not os.path.exists(marker):
-                    raise RuntimeError(
-                        f"orc layout cache unavailable at {out_dir}"
-                    )
-        else:
-            shutil.rmtree(tmp, ignore_errors=True)
-    return out_dir
+
+    return derived_dir(sf_dir, "documents", "orcdocs", [], build)
 
 
 def q304_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -11,7 +11,7 @@ Same house rules and oracle discipline as the parent module.
 from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pandas_streaming_spark.catalog import load_table
+from pandas_streaming_spark.catalog import derived_dir, load_table
 from pandas_streaming_spark.streaming.replay import run_stream_to_df
 from pandas_streaming_spark.queries.streaming_q import (
     K_BATCHES,
@@ -31,38 +31,28 @@ def q107_kafka_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the spool replay is exactly-once, no drops and no duplicates. The
     oracle recomputes the same facts from the table, so a routing,
     framing, or offset bug cannot grade green."""
-    import hashlib
-    import os
-
     from pandas_streaming_spark.sources import kafka
     from pandas_streaming_spark.sources.kafka_spool import produce_distributed
-    from pandas_streaming_spark.streaming.replay import SCRATCH
 
-    ev = load_table(spark, sf_dir, "events")
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}|k4".encode()).hexdigest()[:12]
-    spool = os.path.join(SCRATCH, f"kspool-{key}")
-    marker = os.path.join(spool, "_OK")
-    if not os.path.exists(marker):
+    def build(tmp: str) -> None:
         # task-side fixture producer: explicit partition routing
         # (user_id % 4), event-id order within each partition ->
         # deterministic offsets; nothing but the 4-row write summary
         # ever reaches the driver
         produce_distributed(
-            ev.select(
+            load_table(spark, sf_dir, "events").select(
                 F.col("user_id").cast("string").alias("key"),
                 F.col("event_type").alias("value"),
                 F.unix_millis("ts").alias("ts_ms"),
                 (F.col("user_id") % 4).cast("int").alias("partition"),
                 F.col("event_id").alias("__ord"),
             ),
-            spool,
+            tmp,
             "events",
             order_col="__ord",
         )
-        with open(marker, "w") as f:
-            f.write("ok")
+
+    spool = derived_dir(sf_dir, "events", "kspool", ["k4"], build)
     stream = kafka(spark, "events", "spool://" + spool)
     out = run_stream_to_df(
         spark, stream, "append", state_partitions=jvm_state_partitions(sf_dir)
@@ -93,46 +83,36 @@ def q115_kafka_json_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     maxOffsetsPerTrigger splits the replay into real micro-batches so
     the window state is built incrementally, not in one gulp."""
-    import hashlib
+    import glob
     import os
+
+    import pyarrow.parquet as pq
 
     from pandas_streaming_spark.sources import kafka
     from pandas_streaming_spark.sources.kafka_spool import produce_distributed
-    from pandas_streaming_spark.streaming.replay import SCRATCH
 
-    ev = load_table(spark, sf_dir, "events")
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}|json4".encode()
-    ).hexdigest()[:12]
-    spool = os.path.join(SCRATCH, f"kspool-{key}")
-    marker = os.path.join(spool, "_OK")
-    if not os.path.exists(marker):
+    def build(tmp: str) -> None:
         produce_distributed(
-            ev.select(
+            load_table(spark, sf_dir, "events").select(
                 F.col("user_id").cast("string").alias("key"),
                 F.to_json(F.struct("event_type", "value")).alias("value"),
                 F.unix_millis("ts").alias("ts_ms"),
                 (F.col("user_id") % 4).cast("int").alias("partition"),
                 F.col("event_id").alias("__ord"),
             ),
-            spool,
+            tmp,
             "events_json",
             order_col="__ord",
         )
-        with open(marker, "w") as f:
-            f.write("ok")
 
-    import glob as _glob
+    spool = derived_dir(sf_dir, "events", "kspool", ["json4"], build)
 
-    import pyarrow.parquet as pq
-
+    src = os.path.join(sf_dir, "events.parquet")
     # scaled replicas are Spark-written DIRECTORIES of part files
     n = (
         sum(
             pq.read_metadata(f).num_rows
-            for f in _glob.glob(os.path.join(src, "*.parquet"))
+            for f in glob.glob(os.path.join(src, "*.parquet"))
         )
         if os.path.isdir(src)
         else pq.read_metadata(src).num_rows
@@ -185,33 +165,21 @@ def q128_kafka_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition assignment is an implementation detail, the committed
     record SET is not. A torn write, lost partition, or double-commit
     moves the totals."""
-    import hashlib
-    import os
-
     from pandas_streaming_spark.sources import kafka
     from pandas_streaming_spark.sources.kafka_spool import to_kafka_spool
-    from pandas_streaming_spark.streaming.replay import SCRATCH
 
-    ev = load_table(spark, sf_dir, "events")
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}|sink".encode()
-    ).hexdigest()[:12]
-    spool = os.path.join(SCRATCH, f"kspool-{key}")
-    marker = os.path.join(spool, "_OK")
-    if not os.path.exists(marker):
+    def build(tmp: str) -> None:
         to_kafka_spool(
-            ev.select(
+            load_table(spark, sf_dir, "events").select(
                 F.col("user_id").cast("string").alias("key"),
                 F.col("event_type").alias("value"),
                 F.unix_millis("ts").alias("ts_ms"),
             ).repartition(4),
             "events_sink",
-            spool,
+            tmp,
         )
-        with open(marker, "w") as f:
-            f.write("ok")
+
+    spool = derived_dir(sf_dir, "events", "kspool", ["sink"], build)
     stream = kafka(spark, "events_sink", "spool://" + spool)
     out = run_stream_to_df(
         spark, stream, "append", state_partitions=jvm_state_partitions(sf_dir)

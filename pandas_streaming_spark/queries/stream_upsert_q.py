@@ -201,14 +201,9 @@ def _run_replay(spark, sf_dir, replay_dir, transform):
     )
 
     stream = _re(spark, sf_dir, replay_dir)
-    import glob as _glob
-    import os as _os
-
-    n_files = len(_glob.glob(_os.path.join(replay_dir, "batch_*.parquet")))
     return _run(
         spark, transform(stream), "complete",
         state_partitions=_sq.jvm_state_partitions(sf_dir),
-        final_batch_id=n_files - 1,
     )
 
 

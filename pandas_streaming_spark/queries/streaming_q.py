@@ -34,9 +34,9 @@ K_BATCHES = 5
 #: small (≲ thousands of keys at any tested SF) and EVERY trigger commits
 #: EVERY state partition, so matching the session's 32 shuffle partitions
 #: paid 32 near-empty store commits per micro-batch — the dominant term
-#: in the replay's wall time (scripts/profile_streaming.py: per-trigger
-#: cost 1.02 s at 32 partitions; 32→4 took the k=5 tumbling replay from
-#: 6.2 s to 2.7 s for identical results, and 4→1 shaves another ~10%
+#: in the replay's wall time (per-trigger cost 1.02 s at 32 partitions;
+#: 32→4 took the k=5 tumbling replay from 6.2 s to 2.7 s for identical
+#: results, and 4→1 shaves another ~10%
 #: at sf0.1 where even the stream-stream joins hold ≤2×100k state rows).
 #: At real scale size this to state volume, not a constant.
 STATE_PARTITIONS = 1
@@ -130,19 +130,11 @@ def _final(
     max_files_per_trigger: int | None = 1,
     state_partitions: int | None = None,
 ):
-    # content-keyed cached split (persists in .scratch; shared by all
-    # streaming queries at this sf/k)
+    # derived copy under .scratch, shared by all streaming queries at this sf/k
     replay_dir = write_replay_batches(spark, sf_dir, K_BATCHES, dup_every=dup_every)
     stream = replay_events(
         spark, sf_dir, replay_dir, max_files_per_trigger=max_files_per_trigger
     )
-    # one micro-batch per split file (maxFilesPerTrigger=1): the last
-    # batch id is known, so complete-mode runs skip the k-1 redundant
-    # full-state rewrites (run_stream_to_df final_batch_id fast path)
-    import glob as _glob
-    import os as _os
-
-    n_files = len(_glob.glob(_os.path.join(replay_dir, "batch_*.parquet")))
     return run_stream_to_df(
         spark, transform(stream), output_mode, key_cols,
         state_partitions=(
@@ -152,7 +144,6 @@ def _final(
             if max_files_per_trigger is not None
             else CATCHUP_STATE_PARTITIONS
         ),
-        final_batch_id=(n_files - 1) if output_mode == "complete" else None,
     )
 
 
@@ -730,14 +721,10 @@ def q303_stream_ingest_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     per distinct (source, text) — production would bound it with a
     watermark (q46/q119's within-watermark form) or an exact-dedup
     compaction; the aggregate is |sources| rows."""
-    from pandas_streaming_spark.streaming.replay import (
-        replay_docs,
-        run_stream_to_df,
-        write_doc_replay_batches,
-    )
+    from pandas_streaming_spark.streaming.replay import write_doc_replay_batches
 
     replay_dir = write_doc_replay_batches(spark, sf_dir, 5)
-    stream = replay_docs(spark, sf_dir, replay_dir)
+    stream = replay_events(spark, sf_dir, replay_dir, table="documents")
     w = F.split("text", " ")
     gated = stream.select(
         "source",
@@ -768,7 +755,7 @@ def q303_stream_ingest_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("n_unique_pass"),
         F.sum("__n").alias("n_tokens"),
     )
-    out = run_stream_to_df(spark, agg, "complete", final_batch_id=4)
+    out = run_stream_to_df(spark, agg, "complete")
     return out.select(
         "source",
         F.col("n_unique_pass").cast("long").alias("n_unique_pass"),
@@ -810,13 +797,10 @@ def q308_stream_neardup_dedup(
     graded bit-for-bit against first principles."""
     from pandas_streaming_spark.functions import shingles_of, tokens
     from pandas_streaming_spark.operators.stateful import bucket_claim_tws
-    from pandas_streaming_spark.streaming.replay import (
-        replay_docs,
-        write_doc_replay_batches,
-    )
+    from pandas_streaming_spark.streaming.replay import write_doc_replay_batches
 
     replay_dir = write_doc_replay_batches(spark, sf_dir, k)
-    stream = replay_docs(spark, sf_dir, replay_dir)
+    stream = replay_events(spark, sf_dir, replay_dir, table="documents")
     sh = stream.select(
         "doc_id", shingles_of(tokens("text"), 3).alias("__sh")
     ).filter(F.size("__sh") >= 1)
@@ -945,7 +929,6 @@ def q309_incremental_neardup_merge(
     )
     from pandas_streaming_spark.streaming.replay import (
         _fresh_dir,
-        replay_docs,
         write_doc_replay_batches,
     )
     from pandas_streaming_spark.streaming.upsert import KeyedUpsertSink
@@ -1019,7 +1002,7 @@ def q309_incremental_neardup_merge(
         replay_dir = write_doc_replay_batches(
             spark, sf_dir, k, where="doc_id % 5 = 0"
         )
-        stream = replay_docs(spark, sf_dir, replay_dir)
+        stream = replay_events(spark, sf_dir, replay_dir, table="documents")
         prev = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
         try:
@@ -1077,13 +1060,12 @@ def q312_capped_incremental_neardup(
     dethroning provably exercised — ~20 corpus claimants fall at
     sf0.001). Scale: every per-shard term is bounded by shard size or
     cap, never by corpus bucket depth — the capped 10x densified probe
-    (scripts/probe_cap10x.py) is the measured receipt."""
+    (plans/scale_notes.md, r15) is the measured receipt."""
     import shutil as _sh
 
     from pandas_streaming_spark.operators.dedup import CappedLshIndex
     from pandas_streaming_spark.streaming.replay import (
         _fresh_dir,
-        replay_docs,
         write_doc_replay_batches,
     )
 
@@ -1096,7 +1078,7 @@ def q312_capped_incremental_neardup(
         replay_dir = write_doc_replay_batches(
             spark, sf_dir, k, where="doc_id % 5 = 0"
         )
-        stream = replay_docs(spark, sf_dir, replay_dir)
+        stream = replay_events(spark, sf_dir, replay_dir, table="documents")
         prev = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
         try:

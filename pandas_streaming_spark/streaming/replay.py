@@ -18,7 +18,9 @@ the replicas back into one in-order stream. The id-arithmetic rule at
 k), and an id-contiguous split would restart event time at every replica
 boundary, turning the whole tail into watermark-late data — both caught
 by the round-7 10x correctness axis. Time-rank splits keep each parquet
-file one in-order micro-batch via ``maxFilesPerTrigger=1``.
+file one in-order micro-batch via ``maxFilesPerTrigger=1``; the file
+source takes the oldest file first, so every split is handed out with
+its batch mtimes stamped in name order, whatever happened to the files.
 
 Everything here is Spark-side: the split is written by executor tasks
 (the driver only renames files), and the sink spills micro-batch output
@@ -36,10 +38,14 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(__file__))), ".scratch")
+from pandas_streaming_spark.catalog import SCRATCH, derived_dir, load_table
 
 #: sentinel rows use this key; downstream queries filter it out
 SENTINEL_USER = -1
+
+#: mtime of batch_0000.parquet in every replay split; batch i is stamped
+#: i seconds later (see _stamp_order)
+_BATCH0_MTIME_NS = 1_000_000_000 * 1_000_000_000
 
 
 def _fresh_dir(tag: str) -> str:
@@ -66,60 +72,13 @@ def write_replay_batches(
     spark: SparkSession,
     sf_dir: str,
     k: int,
-    out_dir: str | None = None,
     dup_every: int | None = None,
     sentinel: bool = False,
 ) -> str:
-    """See _write_replay_batches. Splits are immutable once written, so
-    the default (no explicit out_dir) reuses a content-keyed directory
-    under .scratch — ~9 graded streaming queries share one split instead
-    of re-running the split job each."""
-    if out_dir is None:
-        import hashlib
-
-        # key on source content (size+mtime), not just the path string:
-        # regenerated testdata at the same path must not reuse a stale split
-        src = os.path.join(sf_dir, "events.parquet")
-        st = os.stat(src)
-        key = hashlib.md5(  # v3 = time-rank split rule, pinned global_index (invalidates v1/v2)
-            f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}|{k}|{dup_every}|{sentinel}|v3".encode()
-        ).hexdigest()[:12]
-        out_dir = os.path.join(SCRATCH, f"replay-{key}")
-        marker = os.path.join(out_dir, "_OK")
-        if os.path.exists(marker):
-            return out_dir
-        # build in a private temp dir and publish with one atomic rename,
-        # so a concurrent worker can never observe a half-written split
-        tmp_dir = f"{out_dir}.tmp-{os.getpid()}"
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-        os.makedirs(tmp_dir, exist_ok=True)
-        _write_replay_batches(spark, sf_dir, k, tmp_dir, dup_every, sentinel)
-        with open(os.path.join(tmp_dir, "_OK"), "w") as f:
-            f.write("ok")
-        try:
-            os.rename(tmp_dir, out_dir)
-        except OSError:
-            if os.path.exists(marker):  # another worker published first
-                shutil.rmtree(tmp_dir, ignore_errors=True)
-            else:  # stale markerless leftover: replace it
-                shutil.rmtree(out_dir, ignore_errors=True)
-                try:
-                    os.rename(tmp_dir, out_dir)
-                except OSError:
-                    return tmp_dir  # lost a re-race; our copy is complete
-        return out_dir
-    return _write_replay_batches(spark, sf_dir, k, out_dir, dup_every, sentinel)
-
-
-def _write_replay_batches(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int,
-    out_dir: str,
-    dup_every: int | None = None,
-    sentinel: bool = False,
-) -> str:
-    """Split ``{sf_dir}/events.parquet`` into k single-file micro-batches.
+    """Split ``{sf_dir}/events.parquet`` into k single-file micro-batches
+    by event-time rank (module docstring), as a derived copy of the
+    events table (``catalog.derived_dir``): graded streaming entries at
+    one sf and k share one split instead of re-running the split job.
 
     ``dup_every``: additionally append every dup_every-th row of batch i
     into batch i+1 (late duplicate injection for the dedup query Q46).
@@ -130,32 +89,10 @@ def _write_replay_batches(
     joins, whose NULL rows only emit once the watermark passes the left
     row's horizon. A finite replay would otherwise withhold the tail.
     """
-    from pandas_streaming_spark.catalog import load_table
-    from pandas_streaming_spark.operators.indexing import global_index
 
-    ev = load_table(spark, sf_dir, "events")  # catalog casts ts to µs
-    n = ev.count()
-    # global event-time rank (ts, event_id unique composite), then the
-    # same proportional cut as the original id rule — see module docstring
-    gi = global_index(ev, ["ts", "event_id"], "__rank")
-    df = gi.df.withColumn(
-        "__b", F.expr(f"CAST((__rank * {k}) DIV {n} AS INT)")
-    ).drop("__rank")
-    if dup_every:
-        w = Window.partitionBy("__b").orderBy("event_id")
-        df = df.withColumn("__rn", F.row_number().over(w))
-    df = df.persist()
-    try:
-        for i in range(k):
-            part = df.filter(F.col("__b") == i)
-            if dup_every and i > 0:
-                carried = df.filter(
-                    (F.col("__b") == i - 1)
-                    & ((F.col("__rn") - 1) % dup_every == 0)
-                )
-                part = carried.unionByName(part)
-            part = part.drop("__b", "__rn") if dup_every else part.drop("__b")
-            _write_single_file(part, os.path.join(out_dir, f"batch_{i:04d}.parquet"))
+    def build(tmp: str) -> None:
+        ev = load_table(spark, sf_dir, "events")  # catalog casts ts to µs
+        _write_split(ev, ["ts", "event_id"], k, tmp, dup_every)
         if sentinel:
             flush = (
                 ev.orderBy(F.col("ts").desc())
@@ -176,11 +113,11 @@ def _write_replay_batches(
                 )
                 .select(*ev.columns)
             )
-            _write_single_file(flush, os.path.join(out_dir, "batch_9999.parquet"))
-    finally:
-        df.unpersist()
-        gi.release()  # global_index's boundary pin
-    return out_dir
+            _write_single_file(flush, os.path.join(tmp, "batch_9999.parquet"))
+
+    return _stamp_order(
+        derived_dir(sf_dir, "events", "replay", [k, dup_every, sentinel], build)
+    )
 
 
 def write_doc_replay_batches(
@@ -189,73 +126,65 @@ def write_doc_replay_batches(
     """Split ``{sf_dir}/documents.parquet`` into k single-file
     micro-batches in doc_id order — the document-stream twin of
     write_replay_batches (q303 streams the curation pipeline over it).
-    Content-keyed immutable cache dir, same atomic-publish protocol.
     ``where`` (optional SQL predicate) replays only the matching subset
-    — the new-crawl-shard arrival shape q309 ingests incrementally; it
-    is part of the cache key."""
-    import hashlib
+    — the new-crawl-shard arrival shape q309 ingests incrementally."""
 
-    from pandas_streaming_spark.catalog import load_table
+    def build(tmp: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        _write_split(docs.filter(where) if where else docs, ["doc_id"], k, tmp)
+
+    return _stamp_order(
+        derived_dir(sf_dir, "documents", "docreplay", [k, where], build)
+    )
+
+
+def _write_split(
+    df: DataFrame,
+    order_cols: list[str],
+    k: int,
+    out_dir: str,
+    dup_every: int | None = None,
+) -> None:
+    """Write ``df`` as ``batch_0000.parquet`` .. ``batch_{k-1}``: batch i
+    holds the rows whose global rank under ``order_cols`` satisfies
+    ``floor(rank * k / n) == i``."""
     from pandas_streaming_spark.operators.indexing import global_index
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{sf_dir}|{st.st_size}|{st.st_mtime_ns}|{k}|docs-v1|{where or ''}".encode()
-    ).hexdigest()[:12]
-    out_dir = os.path.join(SCRATCH, f"docreplay-{key}")
-    marker = os.path.join(out_dir, "_OK")
-    if os.path.exists(marker):
-        return out_dir
-    tmp_dir = f"{out_dir}.tmp-{os.getpid()}"
-    shutil.rmtree(tmp_dir, ignore_errors=True)
-    os.makedirs(tmp_dir, exist_ok=True)
-    docs = load_table(spark, sf_dir, "documents")
-    if where:
-        docs = docs.filter(where)
-    n = docs.count()
-    gi = global_index(docs, ["doc_id"], "__rank")
-    df = gi.df.withColumn(
+    n = df.count()
+    gi = global_index(df, order_cols, "__rank")
+    split = gi.df.withColumn(
         "__b", F.expr(f"CAST((__rank * {k}) DIV {n} AS INT)")
-    ).drop("__rank").persist()
+    ).drop("__rank")
+    if dup_every:
+        w = Window.partitionBy("__b").orderBy(order_cols[-1])
+        split = split.withColumn("__rn", F.row_number().over(w))
+    split = split.persist()
     try:
         for i in range(k):
-            _write_single_file(
-                df.filter(F.col("__b") == i).drop("__b"),
-                os.path.join(tmp_dir, f"batch_{i:04d}.parquet"),
-            )
+            part = split.filter(F.col("__b") == i)
+            if dup_every and i > 0:
+                carried = split.filter(
+                    (F.col("__b") == i - 1)
+                    & ((F.col("__rn") - 1) % dup_every == 0)
+                )
+                part = carried.unionByName(part)
+            part = part.drop("__b", "__rn") if dup_every else part.drop("__b")
+            _write_single_file(part, os.path.join(out_dir, f"batch_{i:04d}.parquet"))
     finally:
-        df.unpersist()
-        gi.release()
-    with open(os.path.join(tmp_dir, "_OK"), "w") as f:
-        f.write("ok")
-    try:
-        os.rename(tmp_dir, out_dir)
-    except OSError:
-        if os.path.exists(marker):
-            shutil.rmtree(tmp_dir, ignore_errors=True)
-        else:
-            shutil.rmtree(out_dir, ignore_errors=True)
-            try:
-                os.rename(tmp_dir, out_dir)
-            except OSError:
-                return tmp_dir
-    return out_dir
+        split.unpersist()
+        gi.release()  # global_index's boundary pin
 
 
-def replay_docs(
-    spark: SparkSession, sf_dir: str, replay_dir: str
-) -> DataFrame:
-    """Streaming DataFrame over a documents replay dir (one file per
-    micro-batch, name order = doc_id order)."""
-    from pandas_streaming_spark.catalog import load_table
-
-    schema = load_table(spark, sf_dir, "documents").schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(replay_dir)
-    )
+def _stamp_order(replay_dir: str) -> str:
+    """Give the batch files of a split mtimes that rise with their names.
+    The file source reads the oldest file first, so a split whose mtimes
+    were reset (copied, restored, touched) would otherwise replay out of
+    order; stamping on every return makes name order the replay order."""
+    names = sorted(f for f in os.listdir(replay_dir) if f.startswith("batch_"))
+    for i, name in enumerate(names):
+        t = _BATCH0_MTIME_NS + i * 1_000_000_000
+        os.utime(os.path.join(replay_dir, name), ns=(t, t))
+    return replay_dir
 
 
 def replay_events(
@@ -263,11 +192,13 @@ def replay_events(
     sf_dir: str,
     replay_dir: str,
     max_files_per_trigger: int | None = 1,
+    table: str = "events",
 ) -> DataFrame:
-    """Streaming DataFrame over the replay dir, one file per micro-batch.
+    """Streaming DataFrame over a replay split of ``table`` (events, or
+    documents for write_doc_replay_batches), one file per micro-batch.
 
-    The replay files carry µs timestamps (write_replay_batches writes the
-    catalog-normalized frame), so the schema is the catalog schema.
+    The replay files carry the catalog-normalized frame (µs timestamps),
+    so the schema is the catalog schema.
 
     ``max_files_per_trigger=None`` removes the per-file trigger cap:
     ``availableNow`` then batches the whole backlog into as few triggers
@@ -275,9 +206,7 @@ def replay_events(
     stream runs after downtime. Batch-split invariance (tested for
     k ∈ {1, 5, 20}) guarantees the final state is identical; only the
     trigger count changes. The graded protocol keeps the cap at 1."""
-    from pandas_streaming_spark.catalog import load_table
-
-    schema = load_table(spark, sf_dir, "events").schema
+    schema = load_table(spark, sf_dir, table).schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
@@ -302,7 +231,6 @@ def run_stream_to_df(
     key_cols: list[str] | None = None,
     trigger: str = "available_now",
     state_partitions: int | None = None,
-    final_batch_id: int | None = None,
 ) -> DataFrame:
     """Run a streaming DataFrame to completion (availableNow) and return
     the final state as a *batch* DataFrame.
@@ -328,26 +256,20 @@ def run_stream_to_df(
     real scale pick ~(state size / ~100 MB) partitions; the conf is
     restored after the run either way.
 
-    ``final_batch_id``: retained for API compatibility, now a no-op.
-    The r5 noop fast path existed to skip k-1 redundant complete-mode
-    full-state parquet rewrites; the r7 native memory sink (below) never
-    writes parquet at all, so there is nothing left to skip.
-
-    Sink selection (round 7, VERDICT r6 item 5): ``complete`` and
-    ``append`` run through JVM-NATIVE sinks (the in-memory snapshot sink
-    and the file-stream parquet sink respectively) instead of
-    ``foreachBatch`` — a Python ``foreachBatch`` callback costs a
-    Py4J round-trip plus a Python-side plan build on EVERY trigger,
-    which at replay batch sizes was a measurable slice of the
-    ~250-400 ms/trigger floor. With native sinks the whole trigger loop
-    (planning, state commit, sink write) stays in the JVM. ``update``
-    keeps ``foreachBatch`` — it must stamp each batch's rows with the
-    batch id for last-writer-wins resolution, which no built-in sink
-    records. The complete-mode memory sink holds the final snapshot in
-    driver memory: that is exactly the frame every caller materializes
-    anyway (complete-mode state is aggregated, orders of magnitude
-    smaller than the stream), and the append path still spills
-    executor-side.
+    Sink selection: ``complete`` and ``append`` run through JVM-native
+    sinks (the in-memory snapshot sink and the file-stream parquet sink
+    respectively) instead of ``foreachBatch`` — a Python
+    ``foreachBatch`` callback costs a Py4J round-trip plus a Python-side
+    plan build on EVERY trigger, which at replay batch sizes was a
+    measurable slice of the ~250-400 ms/trigger floor. With native sinks
+    the whole trigger loop (planning, state commit, sink write) stays in
+    the JVM. ``update`` keeps ``foreachBatch`` — it must stamp each
+    batch's rows with the batch id for last-writer-wins resolution,
+    which no built-in sink records. The complete-mode memory sink holds
+    the final snapshot in driver memory: that is exactly the frame every
+    caller materializes anyway (complete-mode state is aggregated,
+    orders of magnitude smaller than the stream), and the append path
+    still spills executor-side.
 
     The result is local-checkpointed so the spill dir can be deleted.
     """
@@ -370,11 +292,7 @@ def run_stream_to_df(
     if output_mode == "complete":
         # JVM-native snapshot sink: every trigger truncate+inserts the
         # current full state into a driver-side in-memory table; no
-        # Python callback, no parquet rewrites, and the final_batch_id
-        # fast-path bookkeeping is moot (nothing redundant is written
-        # beyond the small state itself). Supersedes the r5 noop fast
-        # path AND its loud-failure guard: the last trigger's snapshot
-        # IS the table, there is no "skipped final write" hazard.
+        # Python callback and no parquet rewrites
         mem_name = f"replay_mem_{uuid.uuid4().hex[:8]}"
         w = (
             stream_df.writeStream.outputMode("complete")

@@ -1,16 +1,24 @@
 """catalog.load_table schema reuse: a table's schema is inferred once
 per file state and inference confs, then read with an explicit schema
-that starts no Spark job."""
+that starts no Spark job. catalog.derived_dir: a derived copy of a
+table is built once per source state and published whole."""
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
+import sys
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from pandas_streaming_spark import catalog
-from pandas_streaming_spark.catalog import load_table
+from pandas_streaming_spark.catalog import derived_dir, load_table
 
 NANOS = "spark.sql.legacy.parquet.nanosAsLong"
 
@@ -83,9 +91,6 @@ def test_failed_inference_is_not_stored(spark, tmp_path):
 def test_threads_share_the_map(spark, tmp_path):
     """The plan audit's thread pool loads tables concurrently: every
     load sees the right schema and the map keeps one entry per key."""
-    import sys
-    from concurrent.futures import ThreadPoolExecutor
-
     d = str(tmp_path)
     path = catalog.table_path(d, "nation")
     pq.write_table(pa.table({"n_nationkey": [0], "n_name": ["ALGERIA"]}), path)
@@ -102,3 +107,108 @@ def test_threads_share_the_map(spark, tmp_path):
         sys.setswitchinterval(interval)
     assert cols == [["n_nationkey", "n_name"]] * 32
     assert len(_entries(path)) == 1
+
+
+# --- derived copies ---------------------------------------------------------
+
+
+@pytest.fixture
+def source(tmp_path):
+    """An sf dir whose ``orders`` table derived_dir only stats; removes the
+    ``test-derived`` copies and locks under SCRATCH afterwards."""
+    d = str(tmp_path)
+    with open(catalog.table_path(d, "orders"), "wb") as f:
+        f.write(b"v1")
+    yield d
+    for path in glob.glob(os.path.join(catalog.SCRATCH, "test-derived-*")):
+        if os.path.isdir(path):
+            shutil.rmtree(path)
+        else:
+            os.remove(path)
+
+
+def _builder(calls: list):
+    def build(tmp: str) -> None:
+        calls.append(tmp)
+        for i in range(3):
+            with open(os.path.join(tmp, f"part-{i}"), "w") as f:
+                f.write(str(i))
+
+    return build
+
+
+def _derive(sf: str, build) -> str:
+    return derived_dir(sf, "orders", "test-derived", ["p"], build)
+
+
+def test_derived_dir_builds_once(source):
+    calls: list = []
+    out = _derive(source, _builder(calls))
+    assert _derive(source, _builder(calls)) == out
+    assert len(calls) == 1
+    assert sorted(os.listdir(out)) == ["_OK", "part-0", "part-1", "part-2"]
+    assert not os.path.exists(calls[0])  # the temp dir was renamed away
+
+
+def test_rewritten_source_gets_a_new_dir(source):
+    calls: list = []
+    first = _derive(source, _builder(calls))
+    with open(catalog.table_path(source, "orders"), "wb") as f:
+        f.write(b"v2, longer")
+    second = _derive(source, _builder(calls))
+    assert second != first and len(calls) == 2
+
+
+def test_failed_build_publishes_nothing(source):
+    def build(tmp: str) -> None:
+        with open(os.path.join(tmp, "part-0"), "w") as f:
+            f.write("half")
+        raise RuntimeError("build failed")
+
+    with pytest.raises(RuntimeError, match="build failed"):
+        _derive(source, build)
+    key = catalog.derived_key(source, "orders", ["p"])
+    out = os.path.join(catalog.SCRATCH, f"test-derived-{key}")
+    assert not os.path.exists(out)
+    assert glob.glob(f"{out}.tmp-*") == []
+
+
+def test_stale_dir_without_marker_is_replaced(source):
+    key = catalog.derived_key(source, "orders", ["p"])
+    out = os.path.join(catalog.SCRATCH, f"test-derived-{key}")
+    os.makedirs(out)
+    with open(os.path.join(out, "leftover"), "w") as f:
+        f.write("from a crashed in-place build")
+    calls: list = []
+    assert _derive(source, _builder(calls)) == out
+    assert len(calls) == 1
+    assert sorted(os.listdir(out)) == ["_OK", "part-0", "part-1", "part-2"]
+
+
+def test_threads_that_miss_together_share_one_dir(source):
+    """Eight threads miss one key at the same moment: each gets the same
+    complete directory, and the copy is built once."""
+    calls: list = []
+    build = _builder(calls)
+    start = threading.Barrier(8)
+
+    def slow_build(tmp: str) -> None:
+        time.sleep(0.2)
+        build(tmp)
+
+    def worker() -> tuple:
+        start.wait()
+        out = _derive(source, slow_build)
+        return out, sorted(os.listdir(out))
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=8) as pool:
+            futures = [pool.submit(worker) for _ in range(8)]
+            results = [f.result(timeout=60) for f in futures]
+    finally:
+        sys.setswitchinterval(interval)
+    assert len({out for out, _ in results}) == 1
+    assert all(files == ["_OK", "part-0", "part-1", "part-2"] for _, files in results)
+    assert len(calls) == 1

@@ -86,24 +86,17 @@ def test_verified_pairs_materializes_once_and_matches_kernel(spark, sf_dir):
     """The report family's pair frame: first call computes + commits via
     the MERGE sink, later calls serve the committed snapshot, and the
     stored rows equal a fresh kernel run (VERDICT r12 item 2)."""
-    import os
     import shutil
 
     from pandas_streaming_spark.catalog import load_table
     from pandas_streaming_spark.queries.dedup_q import (
-        _PAIRS_ALGO_V,
-        _corpus_fingerprint,
         _neardup_pairs,
+        _pairs_dir,
         verified_pairs,
     )
-    from pandas_streaming_spark.streaming.replay import SCRATCH
     from pandas_streaming_spark.streaming.upsert import KeyedUpsertSink
 
-    base = os.path.join(
-        SCRATCH,
-        "verified_pairs",
-        f"{_corpus_fingerprint(sf_dir)}-t8000-{_PAIRS_ALGO_V}",
-    )
+    base = _pairs_dir(sf_dir, 8000)
     shutil.rmtree(base, ignore_errors=True)
     first = {tuple(r) for r in verified_pairs(spark, sf_dir, 8000).collect()}
     sink = KeyedUpsertSink(base, key_cols=["id_a", "id_b"], seq_cols=["jac_e4"])
@@ -120,10 +113,10 @@ def test_verified_pairs_materializes_once_and_matches_kernel(spark, sf_dir):
 
 
 def test_verified_pairs_fingerprint_tracks_corpus(sf_dir):
-    from pandas_streaming_spark.queries.dedup_q import _corpus_fingerprint
+    from pandas_streaming_spark.queries.dedup_q import _pairs_dir
 
-    assert _corpus_fingerprint("/root/testdata/sf0.001") != _corpus_fingerprint(
-        "/root/testdata/sf0.01"
+    assert _pairs_dir("/root/testdata/sf0.001", 8000) != _pairs_dir(
+        "/root/testdata/sf0.01", 8000
     )
 
 

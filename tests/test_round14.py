@@ -37,14 +37,14 @@ def test_dir_fingerprint_tracks_mtime(tmp_path, sf_dir):
     """A regenerated corpus with byte-identical part sizes but a new
     mtime must map to a DIFFERENT fingerprint (ADVICE r13: the dir
     branch used to hash names+sizes only)."""
-    from pandas_streaming_spark.queries.dedup_q import _corpus_fingerprint
+    from pandas_streaming_spark.queries.dedup_q import _pairs_dir
 
     corpus = _dir_corpus(tmp_path, sf_dir)
     part = os.path.join(corpus, "documents.parquet", "part-00000.parquet")
-    fp1 = _corpus_fingerprint(corpus)
+    fp1 = _pairs_dir(corpus, 8000)
     st = os.stat(part)
     os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
-    fp2 = _corpus_fingerprint(corpus)
+    fp2 = _pairs_dir(corpus, 8000)
     assert fp1 != fp2  # same sizes, different mtime -> fresh artifact
 
 
@@ -53,29 +53,23 @@ def test_dir_fingerprint_regeneration_forces_recompute(spark, tmp_path, sf_dir):
     corpus, then 'regenerate' it (same sizes, bumped mtime) — the
     second call must commit a SECOND artifact (recompute), not serve
     the first one."""
-    from pandas_streaming_spark.queries.dedup_q import (
-        _PAIRS_ALGO_V,
-        _corpus_fingerprint,
-        verified_pairs,
-    )
-    from pandas_streaming_spark.streaming.replay import SCRATCH
+    from pandas_streaming_spark.queries.dedup_q import _pairs_dir, verified_pairs
     from pandas_streaming_spark.streaming.upsert import KeyedUpsertSink
 
     corpus = _dir_corpus(tmp_path, sf_dir)
     part = os.path.join(corpus, "documents.parquet", "part-00000.parquet")
-    root = os.path.join(SCRATCH, "verified_pairs")
 
-    tag1 = f"{_corpus_fingerprint(corpus)}-t8000-{_PAIRS_ALGO_V}"
+    tag1 = _pairs_dir(corpus, 8000)
     n1 = verified_pairs(spark, corpus, 8000).count()
     st = os.stat(part)
     os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000_000))
-    tag2 = f"{_corpus_fingerprint(corpus)}-t8000-{_PAIRS_ALGO_V}"
+    tag2 = _pairs_dir(corpus, 8000)
     n2 = verified_pairs(spark, corpus, 8000).count()
 
     assert tag1 != tag2 and n1 == n2 > 0
     for tag in (tag1, tag2):  # each build committed its own artifact
         sink = KeyedUpsertSink(
-            os.path.join(root, tag), key_cols=["id_a", "id_b"], seq_cols=["jac_e4"]
+            tag, key_cols=["id_a", "id_b"], seq_cols=["jac_e4"]
         )
         assert sink.versions() == [1]
 
@@ -103,12 +97,8 @@ def test_gc_spares_recent_artifact_dirs(spark, tmp_path, sf_dir):
     are still collected (ADVICE r13 item 2)."""
     import time
 
-    from pandas_streaming_spark.queries.dedup_q import (
-        _PAIRS_ALGO_V,
-        _corpus_fingerprint,
-        verified_pairs,
-    )
-    from pandas_streaming_spark.streaming.replay import SCRATCH
+    from pandas_streaming_spark.catalog import SCRATCH
+    from pandas_streaming_spark.queries.dedup_q import _pairs_dir, verified_pairs
 
     root = os.path.join(SCRATCH, "verified_pairs")
     os.makedirs(root, exist_ok=True)
@@ -125,8 +115,7 @@ def test_gc_spares_recent_artifact_dirs(spark, tmp_path, sf_dir):
 
     # force a first-build (GC runs only in that branch)
     corpus = _dir_corpus(tmp_path, sf_dir)
-    tag = f"{_corpus_fingerprint(corpus)}-t8000-{_PAIRS_ALGO_V}"
-    shutil.rmtree(os.path.join(root, tag), ignore_errors=True)
+    shutil.rmtree(_pairs_dir(corpus, 8000), ignore_errors=True)
     verified_pairs(spark, corpus, 8000).count()
 
     survivors = set(os.listdir(root))

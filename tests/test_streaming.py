@@ -88,6 +88,51 @@ def test_batch_split_invariance_tumbling(spark, sf_dir, k):
     assert got == normalize(batch)
 
 
+def test_replay_order_survives_reset_mtimes(spark, sf_dir, tmp_path):
+    """The file source reads the oldest file first. A split whose batch
+    mtimes were reset (a copied or restored cache) must still replay in
+    name order: a watermarked k=5 tumbling replay equals the batch answer
+    after the split's mtimes are reversed. The events file is copied so
+    the split gets its own cache entry."""
+    import os
+    import shutil
+
+    from pandas_streaming_spark.catalog import load_table
+    from pandas_streaming_spark.streaming.replay import run_stream_to_df
+
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), tmp_path)
+    sf = str(tmp_path)
+    replay_dir = write_replay_batches(spark, sf, 5)
+    try:
+        names = sorted(f for f in os.listdir(replay_dir) if f.startswith("batch_"))
+        assert len(names) == 5
+        for i, name in enumerate(names):  # newest first: reversed name order
+            t = (2_000_000_000 - i) * 1_000_000_000
+            os.utime(os.path.join(replay_dir, name), ns=(t, t))
+        assert write_replay_batches(spark, sf, 5) == replay_dir
+
+        def hourly(df):
+            return (
+                df.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+                .agg(F.count("*").alias("n"))
+                .select(
+                    F.date_format("w.start", "yyyy-MM-dd HH:mm").alias("w_start"),
+                    "event_type",
+                    "n",
+                )
+            )
+
+        stream = replay_events(spark, sf, replay_dir).withWatermark("ts", "1 hour")
+        got = run_stream_to_df(
+            spark, hourly(stream), "update", key_cols=["w_start", "event_type"]
+        ).toPandas()
+    finally:
+        shutil.rmtree(replay_dir, ignore_errors=True)
+        os.remove(replay_dir + ".lock")
+    batch = hourly(load_table(spark, sf, "events")).toPandas()
+    assert normalize(got) == normalize(batch)
+
+
 @pytest.mark.parametrize("k", [1, 5])
 def test_transform_with_state_matches_batch(spark, sf_dir, k):
     """transformWithStateInPandas (successor stateful API): per-user
@@ -349,29 +394,6 @@ def test_funnel_stream_split_invariance(spark, sf_dir, k):
         for r in funnel_counts(load_table(spark, sf_dir, "events"), stages).collect()
     }
     assert got == batch
-
-
-def test_complete_mode_ignores_wrong_final_batch_id(spark, sf_dir):
-    """ADVICE r6 item 2 (superseded by the r7 native memory sink): the
-    old foreachBatch noop fast path could skip the final snapshot when
-    final_batch_id overestimated the real batch count; the memory sink
-    writes EVERY trigger's snapshot, so a wrong hint must be harmless —
-    the final state matches the batch answer regardless."""
-    from pandas_streaming_spark.catalog import load_table
-    from pandas_streaming_spark.streaming.replay import run_stream_to_df
-
-    replay_dir = write_replay_batches(spark, sf_dir, 3)  # batch ids 0..2
-    stream = replay_events(spark, sf_dir, replay_dir)
-    agg = stream.groupBy("event_type").agg(F.count("*").alias("n"))
-    out = run_stream_to_df(spark, agg, "complete", final_batch_id=99)
-    expected = {
-        (r["event_type"], r["n"])
-        for r in load_table(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(F.count("*").alias("n"))
-        .collect()
-    }
-    assert {(r["event_type"], r["n"]) for r in out.collect()} == expected
 
 
 @pytest.mark.parametrize("k", [1, 8])
