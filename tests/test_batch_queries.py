@@ -7,17 +7,9 @@ from __future__ import annotations
 import pytest
 
 from pandas_streaming_spark.compare import run_compare
-from pandas_streaming_spark.queries import (
-    ORACLES,
-    QUERIES,
-    kafka_q,
-    stream_upsert_q,
-    streaming_q,
-)
+from pandas_streaming_spark.queries import ORACLES, QUERIES
 
-# the streaming families run once, in tests/test_streaming.py
-_STREAMING = {*streaming_q.QUERIES, *kafka_q.QUERIES, *stream_upsert_q.QUERIES}
-BATCH_QUERIES = sorted(n for n in QUERIES if n in ORACLES and n not in _STREAMING)
+BATCH_QUERIES = sorted(n for n in QUERIES if n in ORACLES and "stream" not in n)
 
 
 @pytest.mark.parametrize("name", BATCH_QUERIES)
